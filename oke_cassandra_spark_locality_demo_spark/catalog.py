@@ -13,6 +13,7 @@ fixture.
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -54,6 +55,15 @@ USERS_ROWS = [
 ]
 
 
+def stage_tag(sf_dir: str) -> str:
+    """Directory name for sf_dir's staged copies under the temp dir: the
+    basename plus a short hash of the absolute path, so two datasets
+    that share a basename never share a staged copy."""
+    path = os.path.abspath(sf_dir)
+    digest = hashlib.sha1(path.encode()).hexdigest()[:12]
+    return f"{os.path.basename(path)}-{digest}"
+
+
 def _stage_events_us(sf_dir: str) -> str:
     """The events fixture carries TIMESTAMP(NANOS) — a parquet type
     Spark's reader rejects outright. Stage a microsecond-truncated copy
@@ -64,8 +74,9 @@ def _stage_events_us(sf_dir: str) -> str:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out_dir = os.path.join(tempfile.gettempdir(), "spark_graft_events", tag)
+    out_dir = os.path.join(
+        tempfile.gettempdir(), "spark_graft_events", stage_tag(sf_dir)
+    )
     out = os.path.join(out_dir, "events.parquet")
     if not os.path.exists(out):
         os.makedirs(out_dir, exist_ok=True)

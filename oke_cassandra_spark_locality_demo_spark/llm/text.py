@@ -1136,23 +1136,18 @@ def q_text_perplexity_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     is normal.
 
     Scale shape (r14 optimization round — former shape was three corpus
-    explodes joined back on STRING keys): ONE explode emits each doc's
-    bigrams PLUS a pseudo-row (last token, NULL) — every token instance
-    is either some bigram's w1 or the doc's last token, so unigram
-    counts c1 AND the vocabulary size V ride the same pass with no
-    separate token explode. Keys collapse to xxhash64 longs before any
-    shuffle (the q_text_novelty/dedup-family convention; collision odds
-    ~pairs/2^64, documented there), counts aggregate per
-    (doc, w1h, w2h) so downstream moves distinct doc-bigrams, not
-    instances, and BOTH dictionary lookups become unordered-frame
-    windows over one w1h exchange — partitioning by w1h alone satisfies
-    the (w1h, w2h) window's clustering, so c2 and c1 share the exchange
-    and the two dictionary joins disappear. V is a row_number()==1 tag
-    summed over the same sort (no distinct aggregation); the scored
-    table is localCheckpointed (≤ distinct doc-bigrams rows) so the
-    V-scalar and the per-doc rollup don't re-derive the pipeline.
-    Per-instance nll sums become m·nll_e6 — identical exact integers,
-    since every instance of a (doc,w1,w2) group shares one nll_e6.
+    explodes joined back on STRING keys): ONE explode expression emits
+    each doc's bigrams PLUS a pseudo-row (last token, NULL) — every
+    token instance is either some bigram's w1 or the doc's last token,
+    so the unigram counts c1 and the vocabulary size V derive from the
+    bigram counts with no separate token explode. Keys collapse to
+    xxhash64 longs before any shuffle (the q_text_novelty/dedup-family
+    convention; collision odds ~pairs/2^64, documented there). c2 is
+    one hash aggregate on (w1h, w2h), c1 a second aggregate of those
+    counts on w1h, and V the row count of c1, cross-joined as a
+    broadcast scalar. Each bigram instance joins back to c2 and c1 on
+    the long keys, and the per-doc rollup sums its micro-unit nll.
+    Nothing is checkpointed: each consumer of the explode re-derives it.
     Float parity: each -ln-ratio term is rounded once to integer
     MICRO-units (coarse ≫ the 1-ulp ln() divergence across
     libm/fdlibm), summed exactly as BIGINT, and the mean is derived

@@ -113,18 +113,42 @@ def q_agg_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """COUNT(DISTINCT) (expand-based in Spark) + collect_set, sorted for
-    determinism. The sorted set is emitted as a comma-joined STRING, not
-    an array: the driver's hasher cannot hash array columns
-    (CORRECTNESS_r01 err on this key), so complex-typed outputs are
-    stringified on both sides."""
+    """Two COUNT(DISTINCT)s and a sorted collect_set per return flag,
+    computed as two aggregates joined on the flag.
+
+    Why two: in one ``.agg`` Spark's multi-distinct rewrite feeds all
+    three through one Expand (one row per distinct column per input
+    row) into an ObjectHashAggregate keyed on (flag, orderkey, suppkey,
+    gid) — hundreds of thousands of groups, each carrying a set buffer,
+    so it falls back to sort and the final step is a SortAggregate.
+    Split, the counts run as an Expand x2 under plain HashAggregates
+    (no object buffers), and the collect_set is an object aggregate
+    over the few flag groups only. The set is collected once; its size
+    and its comma-joined form both derive from it. The small side is
+    broadcast and joined null-safely, so a NULL flag group survives.
+    The cost is a second lineitem scan.
+
+    The sorted set is emitted as a comma-joined STRING, not an array:
+    the driver's hasher cannot hash array columns (CORRECTNESS_r01 err
+    on this key), so complex-typed outputs are stringified on both
+    sides."""
     li = load(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
+    counts = li.groupBy("l_returnflag").agg(
         F.countDistinct("l_orderkey").alias("n_orders"),
         F.countDistinct("l_suppkey").alias("n_suppliers"),
-        F.size(F.collect_set("l_linestatus")).alias("n_statuses"),
-        F.array_join(F.sort_array(F.collect_set("l_linestatus")), ",").alias("statuses"),
     )
+    statuses = (
+        li.groupBy(F.col("l_returnflag").alias("flag"))
+        .agg(F.sort_array(F.collect_set("l_linestatus")).alias("s"))
+        .select(
+            "flag",
+            F.size("s").alias("n_statuses"),
+            F.array_join("s", ",").alias("statuses"),
+        )
+    )
+    return counts.join(
+        F.broadcast(statuses), counts["l_returnflag"].eqNullSafe(statuses["flag"])
+    ).select("l_returnflag", "n_orders", "n_suppliers", "n_statuses", "statuses")
 
 
 @register(
@@ -1500,11 +1524,10 @@ def q_agg_sketch_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
     below theta_min = min(hk_click, hk_purchase) has rank < k in both
     segments (h < hk ⇒ at most k−1 hashes precede it), so it is
     provably IN both sketches iff its item carries both segments; the
-    count rides the same boolean filter. The user-day table is
-    localCheckpointed (kruskal/heavy-hitters discipline) so its four
-    consumers re-read ~distinct-user-day rows instead of re-running
-    the events aggregation; pre-checkpoint plan fragment dumped per
-    the plans/r14 policy."""
+    count rides the same boolean filter. The user-day table is not
+    checkpointed: its two consumers (the explode and the pair filter)
+    share the events scan and its shuffle through exchange reuse, and
+    each runs the final collect_set aggregation itself."""
     e = load(spark, sf_dir, "events")
     ud = (
         e.groupBy("user_id", F.col("ts").cast("date").alias("d"))

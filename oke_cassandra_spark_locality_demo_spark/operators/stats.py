@@ -178,25 +178,28 @@ def q_stats_kruskal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rows = grp.crossJoin(F.broadcast(tie)).collect()
     moments = {r["g"]: (r["n"], r["r2"]) for r in rows}
-    # empty input leaves the crossJoin with zero rows (ADVICE r13): the
-    # old standalone 1-row aggregate always returned a (null) tc row
-    tcorr = rows[0]["tc"] if rows else 0
-    nn = float(sum(n for n, _ in moments.values()))
-    sum_term = None
-    for gname in ["1", "2", "3", "4", "5"]:
-        n_g, r2_g = moments[gname]
-        term = float(r2_g) * float(r2_g) / (4.0 * float(n_g))
-        sum_term = term if sum_term is None else sum_term + term
-    h = (12.0 / (nn * (nn + 1.0)) * sum_term - 3.0 * (nn + 1.0)) / (
-        1.0 - float(tcorr) / (nn * nn * nn - nn)
-    )
+    # H is NULL, as in the oracle's pivot, unless all five groups are
+    # present; an empty input has no group rows at all, so it emits
+    # none
+    h = None
+    if all(g in moments for g in "12345"):
+        tcorr = rows[0]["tc"]
+        nn = float(sum(n for n, _ in moments.values()))
+        sum_term = None
+        for gname in "12345":
+            n_g, r2_g = moments[gname]
+            term = float(r2_g) * float(r2_g) / (4.0 * float(n_g))
+            sum_term = term if sum_term is None else sum_term + term
+        h = (12.0 / (nn * (nn + 1.0)) * sum_term - 3.0 * (nn + 1.0)) / (
+            1.0 - float(tcorr) / (nn * nn * nn - nn)
+        )
     return (
         grp.select(
             F.col("g").alias("grp"),
             "n",
             "r2",
             F.expr("1000000 * r2 DIV (2 * n)").alias("mean_rank_micro"),
-            F.round(F.lit(1000000.0) * F.lit(h), 0)
+            F.round(F.lit(1000000.0) * F.lit(h).cast("double"), 0)
             .cast("long")
             .alias("h_micro"),
         )

@@ -27,8 +27,9 @@ def stage_events_dir(spark: SparkSession, sf_dir: str) -> str:
     """Copy events.parquet into a streaming-source directory (idempotent).
 
     Cross-process safety (r10, same audit as workdir.py): the staged
-    copy is a shared cache keyed by sf_dir — worth keeping shared
-    (staging sf0.1 events costs a full rewrite) but the old
+    copy is a shared cache keyed by sf_dir's full path
+    (catalog.stage_tag) — worth keeping shared (staging sf0.1 events
+    costs a full rewrite) but the old
     overwrite-in-place + empty-marker protocol let two first-stagers
     write the SAME directory concurrently. Now each stager writes a
     PID-unique directory and publishes it by atomically replacing the
@@ -37,10 +38,9 @@ def stage_events_dir(spark: SparkSession, sf_dir: str) -> str:
     stagers publish last-wins, and nobody deletes a directory another
     process might be reading. Pre-r10 empty markers fail the content
     check and simply restage."""
-    from ..catalog import load
+    from ..catalog import load, stage_tag
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    base = os.path.join(_STAGE_ROOT, tag)
+    base = os.path.join(_STAGE_ROOT, stage_tag(sf_dir))
     marker = os.path.join(base, "_staged_multi")
     if os.path.exists(marker):
         with open(marker) as f:

@@ -28,6 +28,21 @@ TABLES = (
 ).split()
 
 
+def write_fixture(out_dir: str, like_sf_dir: str, rows: dict[str, list[dict]]) -> str:
+    """Write a fixture directory holding every table in ``TABLES`` with
+    the schema of the same table under ``like_sf_dir``: the given rows
+    for the tables named in ``rows``, no rows for the rest."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(out_dir, exist_ok=True)
+    for t in TABLES:
+        schema = pq.read_schema(os.path.join(like_sf_dir, t + ".parquet"))
+        tbl = pa.Table.from_pylist(rows.get(t, []), schema=schema)
+        pq.write_table(tbl, os.path.join(out_dir, t + ".parquet"))
+    return out_dir
+
+
 def duckdb_conn(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     for t in TABLES:

@@ -76,6 +76,10 @@ ALLOWED: dict[tuple[str, str], str] = {
     ("llm/similarity.py", "q_sim_knn_blas"): (
         "capped probe block: TOP_PROBES rows (constant), Arrow-fetched"
     ),
+    ("llm/similarity.py", "q_sim_lsh"): (
+        "capped probe block: limit(MAX_PROBES + 1) rows, raises past "
+        "MAX_PROBES, Arrow-fetched"
+    ),
     ("llm/similarity.py", "_pca_power_iteration"): (
         "dim x dim Gram matrix (dim=8 fixture, 768 prod = 4.7 MB); "
         "distributed fallback documented at similarity.py:563"

@@ -53,6 +53,21 @@ def test_topk_uses_take_ordered(spark, sf_dir):
     assert "TakeOrderedAndProject" in simple_plan(df)
 
 
+def test_agg_distinct_collect_set_is_keyed_on_flag_alone(spark, sf_dir):
+    """q_agg_distinct keeps its collect_set out of the multi-distinct
+    Expand: the counts run on hash aggregates (no SortAggregate
+    fallback), and the set is collected over the flag groups only."""
+    import re
+
+    plan = simple_plan(get("q_agg_distinct").fn(spark, sf_dir))
+    assert "SortAggregate" not in plan, plan
+    keys = re.findall(
+        r"ObjectHashAggregate\(keys=\[([^\]]*)\], functions=\[[^\]]*collect_set",
+        plan,
+    )
+    assert keys and all(re.fullmatch(r"l_returnflag#\d+", k) for k in keys), plan
+
+
 def test_scan_full_has_no_shuffle(spark, sf_dir):
     df = get("q_scan_full").fn(spark, sf_dir)
     assert count_exchanges(df) == 0

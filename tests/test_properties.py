@@ -195,6 +195,9 @@ def test_results_invariant_under_partitioning(spark, sf_dir):
         "q_select_dsir",
         "q_drift_ks",
         "q_classify_nb",
+        # two aggregates joined on the flag: the counts and the status
+        # set must not move with the layout either
+        "q_agg_distinct",
     ]
     prev_split = spark.conf.get("spark.sql.files.maxPartitionBytes")
     try:
@@ -467,6 +470,9 @@ _ARROW_BATCHED_KEYS = [
     "q_sim_ivf", "q_sim_pq", "q_sim_pq_audit",
     # r11: real PNG encode+decode, two mapInPandas stages
     "q_multimodal_decode_real",
+    # r14 batch kernels: SimHash fold and LSH scorer (the LSH audit
+    # runs the scorer through q_sim_lsh)
+    "q_dedup_simhash", "q_sim_lsh", "q_sim_lsh_audit",
     # eager streaming (plan-invisible, still Arrow-batched):
     "q_stream_stateful", "q_stream_stateful_tws",
 ]
@@ -486,6 +492,7 @@ _ARROW_CALL_SITES = {
         "_zscore_denom:pandas_udf", "q_udf_arrow:mapInArrow",
         "q_udf_cogroup:applyInPandas", "q_udf_grouped_agg:applyInPandas",
     ],
+    "llm/dedup.py": ["q_dedup_simhash:mapInPandas"],
     "llm/ivf.py": [
         "_assign_udf.assign:pandas_udf", "_probe_udf.probes:pandas_udf",
     ],
@@ -501,7 +508,9 @@ _ARROW_CALL_SITES = {
         "q_multimodal_scenecut:mapInPandas",
     ],
     "llm/pq.py": ["_encode_udf.encode:pandas_udf", "q_sim_pq:mapInPandas"],
-    "llm/similarity.py": ["q_sim_knn_blas:mapInPandas"],
+    "llm/similarity.py": [
+        "q_sim_knn_blas:mapInPandas", "q_sim_lsh:mapInPandas",
+    ],
     "llm/text.py": ["q_text_compress_ratio:pandas_udf"],
     "sources/ingest.py": ["q_export_webdataset:applyInPandas"],
     "streaming/stateful.py": [

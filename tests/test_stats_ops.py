@@ -1828,3 +1828,29 @@ def test_sql_udf_inlined_charge_matches_bruteforce(spark, sf_dir):
         for r in _queries()["q_fn_sql_udf"](spark, sf_dir).collect()
     }
     assert got == {k: tuple(v) for k, v in expect.items()}
+
+
+def test_kruskal_empty_and_missing_group_match_oracle(spark, sf_dir, tmp_path):
+    """An empty orders table gives no rows, and a missing priority group
+    gives a NULL H on every row, both as in the oracle's pivot — never a
+    KeyError from the known-group fold."""
+    from datetime import datetime
+
+    from oke_cassandra_spark_locality_demo_spark import registry
+
+    from .parity import compare, duckdb_conn, write_fixture
+
+    spec = registry.get("q_stats_kruskal")
+
+    def order(k, priority, price):
+        return dict(o_orderkey=k, o_custkey=1, o_orderstatus="O",
+                    o_totalprice=price, o_orderdate=datetime(1995, 1, 1),
+                    o_orderpriority=priority)
+
+    no_group_5 = [order(i, f"{1 + i % 4}-X", 100.0 + i % 5) for i in range(12)]
+    for name, rows, n in (("empty", [], 0), ("no_group_5", no_group_5, 4)):
+        d = write_fixture(str(tmp_path / name), sf_dir, {"orders": rows})
+        df = spec.fn(spark, d)
+        ok, msg = compare(df, duckdb_conn(d), spec.oracle)
+        assert ok and msg == f"ok ({n} rows)", f"{name}: {msg}"
+        assert all(r["h_micro"] is None for r in df.collect())

@@ -484,3 +484,31 @@ def test_cdc_merge_recovers_from_disk_and_ignores_torn_snapshot(spark):
         import shutil
 
         shutil.rmtree(base, ignore_errors=True)
+
+
+def test_staged_events_are_keyed_by_full_path(spark, sf_dir, tmp_path):
+    """Two datasets with the same basename and different events must each
+    read back their own rows, through catalog.load's µs staging and
+    through the streaming source stage."""
+    from datetime import datetime
+
+    from oke_cassandra_spark_locality_demo_spark.streaming.runtime import (
+        stage_events_dir,
+    )
+
+    from .parity import write_fixture
+
+    def event(i):
+        return dict(event_id=i, ts=datetime(2024, 1, 1), user_id=i,
+                    event_type="click", value=1.0, props="{}")
+
+    datasets = {}
+    for parent, ids in (("a", [1, 2]), ("b", [3, 4, 5])):
+        d = write_fixture(str(tmp_path / parent / "ds"), sf_dir,
+                          {"events": [event(i) for i in ids]})
+        datasets[d] = ids
+    for d, ids in datasets.items():
+        got = sorted(r.event_id for r in load(spark, d, "events").collect())
+        assert got == ids, d
+        staged = spark.read.parquet(stage_events_dir(spark, d))
+        assert sorted(r.event_id for r in staged.collect()) == ids, d
