@@ -33,11 +33,13 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2.3."""
+    """One entry per implemented operator from SURVEY.md §2.3, in
+    registration order."""
     return registry.all_queries()
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL for every deterministic query; approx/ANN/
-    streaming-only keys are omitted (rows-only check)."""
+    """DuckDB-equivalent SQL for every deterministic query, in
+    registration order; approx/ANN/streaming-only keys are omitted
+    (rows-only check)."""
     return registry.all_oracles()

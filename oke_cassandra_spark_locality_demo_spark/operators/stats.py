@@ -283,25 +283,31 @@ def q_stats_anova_f(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     m = {r["g"]: (r["n"], r["sx"], r["sxx"]) for r in grp.collect()}
-    nn = float(sum(n for n, _, _ in m.values()))
-    sxt = float(sum(sx for _, sx, _ in m.values()))
-    ssb_terms = None
-    ssw_terms = None
-    for s in _SEGMENTS:
-        n_g, sx_g, sxx_g = m[s]
-        b = float(sx_g) * float(sx_g) / float(n_g)
-        w = float(sxx_g) - float(sx_g) * float(sx_g) / float(n_g)
-        ssb_terms = b if ssb_terms is None else ssb_terms + b
-        ssw_terms = w if ssw_terms is None else ssw_terms + w
-    f_stat = ((ssb_terms - sxt * sxt / nn) / (5.0 - 1.0)) / (
-        ssw_terms / (nn - 5.0)
-    )
+    # F is NULL, as in the oracle's pivot, unless all five segments are
+    # present; a zero denominator is NULL too (DuckDB's double division
+    # by zero); an empty input has no group rows at all, so it emits none
+    f_stat = None
+    if all(s in m for s in _SEGMENTS):
+        nn = float(sum(n for n, _, _ in m.values()))
+        sxt = float(sum(sx for _, sx, _ in m.values()))
+        ssb_terms = None
+        ssw_terms = None
+        for s in _SEGMENTS:
+            n_g, sx_g, sxx_g = m[s]
+            b = float(sx_g) * float(sx_g) / float(n_g)
+            w = float(sxx_g) - float(sx_g) * float(sx_g) / float(n_g)
+            ssb_terms = b if ssb_terms is None else ssb_terms + b
+            ssw_terms = w if ssw_terms is None else ssw_terms + w
+        if nn != 5.0 and ssw_terms != 0.0:
+            f_stat = ((ssb_terms - sxt * sxt / nn) / (5.0 - 1.0)) / (
+                ssw_terms / (nn - 5.0)
+            )
     return (
         grp.select(
             F.col("g").alias("grp"),
             "n",
             F.expr("(1000000 * sx) DIV n").alias("centered_mean_micro"),
-            F.round(F.lit(1000000.0) * F.lit(f_stat), 0)
+            F.round(F.lit(1000000.0) * F.lit(f_stat).cast("double"), 0)
             .cast("long")
             .alias("f_micro"),
         )
@@ -387,8 +393,12 @@ def q_stats_cohen_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
         tot_a[r["rater_a"]] = tot_a.get(r["rater_a"], 0) + r["cnt"]
         tot_b[r["rater_b"]] = tot_b.get(r["rater_b"], 0) + r["cnt"]
     chance = sum(tot_a[k] * tot_b.get(k, 0) for k in tot_a)
-    kappa_micro = _truncdiv(
-        1000000 * (n * agree - chance), n * n - chance
+    # N^2 = C (no rows, or both raters put every row in one category)
+    # divides by zero: NULL, as DuckDB's `//`
+    kappa_micro = (
+        _truncdiv(1000000 * (n * agree - chance), n * n - chance)
+        if n * n != chance
+        else None
     )
     return (
         cells.select(

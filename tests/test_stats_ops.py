@@ -1830,27 +1830,66 @@ def test_sql_udf_inlined_charge_matches_bruteforce(spark, sf_dir):
     assert got == {k: tuple(v) for k, v in expect.items()}
 
 
-def test_kruskal_empty_and_missing_group_match_oracle(spark, sf_dir, tmp_path):
-    """An empty orders table gives no rows, and a missing priority group
-    gives a NULL H on every row, both as in the oracle's pivot — never a
-    KeyError from the known-group fold."""
+def _order(k, priority, price):
     from datetime import datetime
 
+    return dict(o_orderkey=k, o_custkey=1, o_orderstatus="O",
+                o_totalprice=price, o_orderdate=datetime(1995, 1, 1),
+                o_orderpriority=priority)
+
+
+_SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
+
+
+def _customer(k, segment, acctbal):
+    return dict(c_custkey=k, c_name=f"c{k}", c_nationkey=1,
+                c_acctbal=acctbal, c_mktsegment=segment)
+
+
+@pytest.mark.parametrize(
+    "key, table, rows, n, stat",
+    [
+        pytest.param("q_stats_kruskal", "orders", [], 0, "h_micro",
+                     id="kruskal-empty"),
+        pytest.param("q_stats_kruskal", "orders",
+                     [_order(i, f"{1 + i % 4}-X", 100.0 + i % 5)
+                      for i in range(12)],
+                     4, "h_micro", id="kruskal-no-group-5"),
+        pytest.param("q_stats_cohen_kappa", "orders", [], 0, "kappa_micro",
+                     id="kappa-empty"),
+        pytest.param("q_stats_cohen_kappa", "orders",
+                     [_order(1, "1-URGENT", 100.0)], 1, "kappa_micro",
+                     id="kappa-one-row"),
+        pytest.param("q_stats_anova_f", "customer", [], 0, "f_micro",
+                     id="anova-empty"),
+        pytest.param("q_stats_anova_f", "customer",
+                     [_customer(i, s, 10.0 * i + 0.25)
+                      for i, s in enumerate(_SEGMENTS[:4] * 3)],
+                     4, "f_micro", id="anova-no-machinery"),
+        pytest.param("q_stats_anova_f", "customer",
+                     [_customer(i, s, 10.0 * i + 0.25)
+                      for i, s in enumerate(_SEGMENTS)],
+                     5, "f_micro", id="anova-one-row-per-segment"),
+        pytest.param("q_stats_anova_f", "customer",
+                     [_customer(i, s, 7.5)
+                      for i, s in enumerate(_SEGMENTS * 2)],
+                     5, "f_micro", id="anova-constant-segments"),
+    ],
+)
+def test_stats_empty_and_degenerate_inputs_match_oracle(
+    spark, sf_dir, tmp_path, key, table, rows, n, stat
+):
+    """An empty input gives no rows, and a missing group or a zero
+    denominator gives a NULL statistic on every row, both as in the
+    oracle — never a KeyError or ZeroDivisionError from the driver-side
+    fold."""
     from oke_cassandra_spark_locality_demo_spark import registry
 
     from .parity import compare, duckdb_conn, write_fixture
 
-    spec = registry.get("q_stats_kruskal")
-
-    def order(k, priority, price):
-        return dict(o_orderkey=k, o_custkey=1, o_orderstatus="O",
-                    o_totalprice=price, o_orderdate=datetime(1995, 1, 1),
-                    o_orderpriority=priority)
-
-    no_group_5 = [order(i, f"{1 + i % 4}-X", 100.0 + i % 5) for i in range(12)]
-    for name, rows, n in (("empty", [], 0), ("no_group_5", no_group_5, 4)):
-        d = write_fixture(str(tmp_path / name), sf_dir, {"orders": rows})
-        df = spec.fn(spark, d)
-        ok, msg = compare(df, duckdb_conn(d), spec.oracle)
-        assert ok and msg == f"ok ({n} rows)", f"{name}: {msg}"
-        assert all(r["h_micro"] is None for r in df.collect())
+    spec = registry.get(key)
+    d = write_fixture(str(tmp_path), sf_dir, {table: rows})
+    df = spec.fn(spark, d)
+    ok, msg = compare(df, duckdb_conn(d), spec.oracle)
+    assert ok and msg == f"ok ({n} rows)", msg
+    assert all(r[stat] is None for r in df.collect())

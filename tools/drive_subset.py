@@ -1,14 +1,10 @@
 """Cross-engine drive of an explicit SUBSET of registry keys at a
 chosen scale — the building block for targeted sweeps the full
-drive_contract.py run doesn't label: pre-adjudication checks of an
-upcoming rotation block, multi-scale coverage of a named key list,
-or a quick re-grade after a localized change.
+drive_contract.py run doesn't label: multi-scale coverage of a named
+key list, or a quick re-grade after a localized change.
 
-Keys come from argv; ``--remaining`` substitutes the current
-never-adjudicated set (tools/rotation_remaining.py's list), which is
-exactly the r10 rotation tail while the rotation is still live.
-Rows-only keys (no oracle_sql entry) get the same >0-rows check the
-external driver applies.
+Keys come from argv. Rows-only keys (no oracle_sql entry) get the same
+>0-rows check the external driver applies.
 
 ``--all`` drives the whole registry, and repeatable ``--conf k=v``
 flags inject session confs BEFORE any query runs — the lever for
@@ -18,10 +14,9 @@ differ from ours on this axis?
 
 Usage:
     python tools/drive_subset.py q_ts_wau q_win_rsi
-    python tools/drive_subset.py --remaining
     python tools/drive_subset.py --all --conf spark.sql.adaptive.enabled=false
-    SPARK_GRAFT_SUBSET_SF=/root/testdata/sf0.001 \
-        python tools/drive_subset.py --remaining
+    SPARK_GRAFT_SUBSET_SF=/root/testdata/sf0.1 \
+        python tools/drive_subset.py q_tpch_q1 q_agg_distinct
 """
 import os
 import sys
@@ -32,13 +27,6 @@ sys.path.insert(0, _ROOT)
 sys.path.insert(0, os.path.join(_ROOT, "tests"))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SUBSET_SF", "/root/testdata/sf0.01")
-
-
-def _remaining_keys() -> list[str]:
-    from oke_cassandra_spark_locality_demo_spark import registry
-
-    adjudicated = set(registry._DRIVER_ADJUDICATED)
-    return [k for k in registry.all_queries() if k not in adjudicated]
 
 
 def main() -> None:
@@ -65,16 +53,14 @@ def main() -> None:
             rest.append(args[i])
             i += 1
     if not rest:
-        print("usage: drive_subset.py KEY [KEY ...] | --remaining | --all"
+        print("usage: drive_subset.py KEY [KEY ...] | --all"
               " [--conf k=v ...]",
               file=sys.stderr)
         sys.exit(2)
-    if rest == ["--remaining"]:
-        keys = _remaining_keys()
-    elif rest == ["--all"]:
+    if rest == ["--all"]:
         keys = None  # resolved to the full registry below
-    elif "--remaining" in rest or "--all" in rest:
-        print("--remaining/--all cannot be combined with explicit keys",
+    elif "--all" in rest:
+        print("--all cannot be combined with explicit keys",
               file=sys.stderr)
         sys.exit(2)
     else:

@@ -1,19 +1,18 @@
 #!/usr/bin/env python
-"""Dump `.explain("formatted")` for named queries into plans/r14/.
+"""Dump `.explain("formatted")` for named queries into OUT_DIR.
 
 Usage:
-    python tools/plans_r14.py before q_dedup_simhash q_tpch_q8 ...
-    python tools/plans_r14.py after  q_dedup_simhash
+    python tools/plans_dump.py plans/r14 before q_dedup_simhash q_tpch_q8 ...
+    python tools/plans_dump.py plans/r14 after  q_dedup_simhash
 
-Writes plans/r14/<query>_<tag>.txt — the optimization-round evidence
-artifact (the judge checks plan claims in OPTIMIZATION_r14.md against
-these files).
+Writes OUT_DIR/<query>_<tag>.txt (OUT_DIR relative to the repo root
+unless absolute) at $SPARK_GRAFT_SF_DIR (default sf0.1): before/after
+plan evidence for a performance change.
 
-r14 addition (VERDICT r13 item 8): queries that `localCheckpoint()` an
-intermediate truncate their final plan at a `Scan ExistingRDD` node, so
-the claim-bearing fragment above the checkpoint is invisible in the
-main dump. localCheckpoint is wrapped here to ALSO write each
-pre-checkpoint fragment as plans/r14/<query>_<tag>_ckptfrag<N>.txt.
+Queries that `localCheckpoint()` an intermediate truncate their final
+plan at a `Scan ExistingRDD` node, so the fragment above the checkpoint
+is invisible in the main dump. localCheckpoint is wrapped here to ALSO
+write each pre-checkpoint fragment as OUT_DIR/<query>_<tag>_ckptfrag<N>.txt.
 """
 from __future__ import annotations
 
@@ -33,12 +32,15 @@ from oke_cassandra_spark_locality_demo_spark.session import build_session
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    if len(sys.argv) < 4:
+        print("usage: plans_dump.py OUT_DIR TAG KEY [KEY ...]", file=sys.stderr)
+        sys.exit(2)
+    out_dir = os.path.join(_ROOT, sys.argv[1])
+    tag = sys.argv[2]
+    names = sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(_ROOT, "plans", "r14")
     os.makedirs(out_dir, exist_ok=True)
-    spark = build_session(app_name="plans-r14")
+    spark = build_session(app_name="plans-dump")
     qs = registry.all_queries()
     orig_ckpt = DataFrame.localCheckpoint
     for name in names:
