@@ -39,7 +39,6 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..registry import register
-from .ivf import quant_key, quant_memo
 
 K_MERGES = 3  #: merge iterations (unrolled verbatim in the oracle SQL)
 
@@ -123,9 +122,7 @@ def train_bpe_merges(
 
     The word-count table is cached for the k iterations (vocab-bounded,
     kilobytes at fixture scale, ~|vocab| rows at 100 TB) and released
-    before return — unlike the dedup corpus indexes there is no
-    cross-invocation reuse to memo, because the trained MERGES are what
-    gets memoized (quant_memo)."""
+    before return. Each registered BPE key trains its own merges."""
     d = load(spark, sf_dir, "documents")
     wc = (
         d.select(
@@ -199,8 +196,7 @@ def q_text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     string emission; the oracle runs the identical unrolled algorithm in
     SQL, so pair counts, tie-breaks, and merge application are checked
     bit-for-bit."""
-    key = quant_key(spark, sf_dir, "bpe", table="documents", k=K_MERGES)
-    merges = quant_memo(key, lambda: train_bpe_merges(spark, sf_dir))
+    merges = train_bpe_merges(spark, sf_dir)
     return spark.createDataFrame(
         merges,
         "merge_rank int, left_sym string, right_sym string, "
@@ -249,17 +245,14 @@ def q_text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     data pipeline runs after tokenizer training (sequence budgeting,
     compression-ratio QA).
 
-    Scale shape: the merges come from the memoized trainer; the encode
+    Scale shape: the merges come from train_bpe_merges; the encode
     table (word → subword count) is built by applying the merge
     REPLACEs to the DISTINCT-word table — vocabulary-bounded work, one
     shuffle — and the corpus-sized token stream then joins it on the
     word key. The join is left to AQE (vocabulary is unbounded at
     100 TB — same no-pinned-broadcast policy as q_text_tfidf/pmi); the
     per-doc rollup is one hash aggregate. All-integer emissions."""
-    merges = quant_memo(
-        quant_key(spark, sf_dir, "bpe", table="documents", k=K_MERGES),
-        lambda: train_bpe_merges(spark, sf_dir),
-    )
+    merges = train_bpe_merges(spark, sf_dir)
     d = load(spark, sf_dir, "documents")
     tok = d.select(
         "doc_id",
@@ -333,16 +326,13 @@ def q_text_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     length and training cost. Emits per-language word/subword/char
     totals plus fertility and compression ratios in integer ppm.
 
-    Scale shape: identical to q_text_bpe_encode (memoized merges,
+    Scale shape: identical to q_text_bpe_encode (trained merges,
     vocabulary-bounded encode table, AQE-decided token-stream join) —
     the only difference is the rollup key (lang, cardinality ~dozens,
     vs doc_id), so the final aggregate is map-side-combinable down to a
     handful of rows. fertility/compression are scale-0 ROUNDs of
     identically derived int ratios (the portable class)."""
-    merges = quant_memo(
-        quant_key(spark, sf_dir, "bpe", table="documents", k=K_MERGES),
-        lambda: train_bpe_merges(spark, sf_dir),
-    )
+    merges = train_bpe_merges(spark, sf_dir)
     d = load(spark, sf_dir, "documents")
     tok = d.select(
         "lang",

@@ -153,21 +153,6 @@ NGRAM_JACCARD_ORACLE = """
 """
 
 
-#: one-slot-per-variant memo for the dedup queries' cached index/cand
-#: DataFrames, keyed by (Spark application id, sf_dir, corpus
-#: fingerprint, variant) — the fingerprint (documents.parquet
-#: mtime+size) means a regenerated fixture at the same path misses
-#: instead of serving a stale index (same ADVICE-r4 fix as
-#: ivf.quant_key). Repeat invocations on the same corpus REUSE the
-#: cached DataFrames (the steady-state a production dedup service runs
-#: in); a different session/corpus unpersists the previous entry FOR
-#: THAT VARIANT first, so executor residue stays bounded (ADVICE r3:
-#: the former unconditional .cache() leaked indefinitely). The raw
-#: 3-shingle table itself lives in ONE shared "shingles3" slot
-#: (_shared_shingles) — per-variant slots hold only their candidate
-#: sets, so eviction of the big table is single-owner and unambiguous.
-_NGRAM_MEMO: dict = {}
-
 #: max candidate pairs the verification join will broadcast; above this
 #: (16 bytes/pair ≈ 32 MB at the cap) the join is left to AQE
 _CAND_BROADCAST_CAP = 2_000_000
@@ -179,9 +164,9 @@ def _capped_broadcast(cand: DataFrame) -> DataFrame:
     An unconditional ``F.broadcast`` on a data-dependent pair set OOMs
     every executor on an adversarial corpus (VERDICT r4 #4); past the
     cap the join is left to AQE's runtime choice. ``cand`` must already
-    be cached — the gating ``count()`` materializes the cache the
-    verification join then reuses; without the cache the candidate join
-    would run twice."""
+    be pinned (memharden.pin) — the gating ``count()`` then reads the
+    materialised blocks the verification join reuses; unpinned, the
+    candidate join would run twice."""
     return F.broadcast(cand) if cand.count() <= _CAND_BROADCAST_CAP else cand
 
 
@@ -222,41 +207,17 @@ from ..memharden import stage_barrier as _stage_barrier
 _PREFIX_DENSITY_SWITCH = 16.0
 
 
-#: Per-corpus memo for the measured avg shingle df (the _prefix_k
-#: scalar): keyed like _NGRAM_MEMO (appId, sf_dir, corpus
-#: fingerprint) so a regenerated fixture at the same path re-measures.
-#: The density is a property of the CORPUS (identical whether the df
-#: table was grouped by raw shingle strings or their xxhash64 — the
-#: hash is injective here up to ~1e-7 collision odds that could only
-#: nudge the scalar, not flip a branch 5x from the switch), so one
-#: slot serves every dedup variant; without it each variant's first
-#: run — and every run of a non-memoized branch — pays a full extra
-#: execution of the shingle pipeline just to read one number
-#: (measured +2.5x on q_dedup_containment at sf0.1, bench r13).
-_DENSITY_MEMO: dict = {}
-
-
-def _prefix_k(dfreq: DataFrame, spark=None, sf_dir=None) -> int:
+def _prefix_k(dfreq: DataFrame) -> int:
     """Blocking order for the generalized prefix filter: measured avg
     document frequency of the corpus's shingles (1-row scalar off the
-    already-needed df table) against _PREFIX_DENSITY_SWITCH. Pass
-    (spark, sf_dir) to memoize the scalar per corpus — callers inside
-    per-variant memo-miss branches should, so the density job runs
-    once per corpus instead of once per variant."""
-    key = None
-    if spark is not None and sf_dir is not None:
-        key = _ngram_memo_key(spark, sf_dir, "density")
-        if key in _DENSITY_MEMO:
-            dens = _DENSITY_MEMO[key]
-            return 2 if dens > _PREFIX_DENSITY_SWITCH else 1
+    already-needed df table) against _PREFIX_DENSITY_SWITCH. Costs one
+    Spark job over the df table's input per call."""
     row = dfreq.agg(F.avg("df").alias("d")).first()
     dens = row[0] if row and row[0] is not None else 0.0
-    if key is not None:
-        _DENSITY_MEMO[key] = dens
     return 2 if dens > _PREFIX_DENSITY_SWITCH else 1
 
 
-def _rarity_prefix(sh: DataFrame, t: float, spark=None, sf_dir=None) -> DataFrame:
+def _rarity_prefix(sh: DataFrame, t: float) -> DataFrame:
     """(doc_id, key, n_sh) candidate-blocking keys from each doc's
     generalized PPJoin prefix — its (n − ⌈t·n⌉ + k) globally-rarest
     shingles under the common (df asc, shingle asc) order, with k
@@ -282,7 +243,7 @@ def _rarity_prefix(sh: DataFrame, t: float, spark=None, sf_dir=None) -> DataFram
     O(N_docs) rows shipped to every executor — an OOM at 1e9 docs,
     VERDICT r4 #4)."""
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    k = _prefix_k(dfreq, spark, sf_dir)
+    k = _prefix_k(dfreq)
     wdoc = W.partitionBy("doc_id")
     # starvation barrier (_stage_barrier docstring): the df-join would
     # otherwise pipeline its sorts into the window sorts below
@@ -347,97 +308,23 @@ def _rarity_prefix(sh: DataFrame, t: float, spark=None, sf_dir=None) -> DataFram
     return pairs.unionByName(singles)
 
 
-def _corpus_fp(sf_dir):
-    """(mtime_ns, size) of the documents fixture — folded into the memo
-    key so a regenerated fixture at the same path never serves a stale
-    cached index (the ADVICE-r4 hazard fixed in ivf.quant_key; this
-    memo had the same hole)."""
-    import os
-
-    try:
-        st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-        return (st.st_mtime_ns, st.st_size)
-    except OSError:
-        return None
-
-
-def _ngram_memo_key(spark, sf_dir, variant):
-    return (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _corpus_fp(sf_dir),
-        variant,
-    )
-
-
-def _ngram_memo_get(spark, sf_dir, variant="jaccard"):
-    return _NGRAM_MEMO.get(_ngram_memo_key(spark, sf_dir, variant))
-
-
-def _ngram_memo_put(spark, sf_dir, dfs, variant="jaccard"):
-    key = _ngram_memo_key(spark, sf_dir, variant)
-    for old_key, old_dfs in list(_NGRAM_MEMO.items()):
-        if old_key[-1] == variant and old_key != key:
-            for df in old_dfs:
-                try:
-                    df.unpersist(blocking=False)
-                except Exception:
-                    pass  # session already stopped — cache died with it
-            del _NGRAM_MEMO[old_key]
-    _NGRAM_MEMO[key] = dfs
-
-
-def _ngram_memo_evict(variant):
-    """Unpersist and drop every memo slot of ``variant`` (test/reset
-    hook — deleting dict entries directly would orphan the cached
-    DataFrames in the live session with nothing left to evict them)."""
-    for key, dfs in list(_NGRAM_MEMO.items()):
-        if key[-1] == variant:
-            for df in dfs:
-                try:
-                    df.unpersist(blocking=False)
-                except Exception:
-                    pass
-            del _NGRAM_MEMO[key]
-
-
-def _shared_shingles(spark, sf_dir, d: DataFrame) -> DataFrame:
-    """The cached 3-word shingle table, ONE slot shared by every dedup
-    variant that consumes the raw (doc_id, shingle) form
-    (prefix / minhash / incr_fuzzy). Spark's CacheManager would
-    already dedupe identical cached plans storage-wise, but sharing
-    the slot makes eviction unambiguous: the table is unpersisted
-    exactly once, when the corpus changes."""
-    memo = _ngram_memo_get(spark, sf_dir, variant="shingles3")
-    if memo is not None:
-        return memo[0]
-    sh = _pin(_shingles(d, 3))
-    _ngram_memo_put(spark, sf_dir, (sh,), variant="shingles3")
-    return sh
-
-
-def _shared_doc_arrays(spark, sf_dir, sh: DataFrame) -> DataFrame:
+def _doc_arrays(sh: DataFrame) -> DataFrame:
     """(doc_id, hs: sorted array<long>) — each doc's distinct 3-shingle
-    set as 64-bit xxhash64 keys, ONE pinned slot (r13 optimization
-    round). Candidate VERIFICATION over this table is two broadcast-cand
+    set as 64-bit xxhash64 keys, pinned because each verification
+    reads it on both sides of the pair (r13 optimization round). Candidate VERIFICATION over this table is two broadcast-cand
     joins plus a per-pair array_intersect — it replaces the former
     shingle-stream shape (a per-doc sizes aggregation over the whole
-    cached shingle table plus a (doc_id, shingle)-keyed join of the
+    pinned shingle table plus a (doc_id, shingle)-keyed join of the
     FULL table against the candidate fan-out) with work proportional to
     the candidate pairs only. Hashed keys follow the family convention
     (q_dedup_ngram_jaccard's verification): collision odds ~1e-7 over
     ~1e6 distinct shingles, and a collision must land inside one
     candidate pair's intersection to perturb a count."""
-    memo = _ngram_memo_get(spark, sf_dir, variant="docarrays")
-    if memo is not None:
-        return memo[0]
-    arr = _pin(
+    return _pin(
         sh.select("doc_id", F.xxhash64("shingle").alias("sh"))
         .groupBy("doc_id")
         .agg(F.sort_array(F.collect_list("sh")).alias("hs"))
     )
-    _ngram_memo_put(spark, sf_dir, (arr,), variant="docarrays")
-    return arr
 
 
 @register("q_dedup_ngram_jaccard", oracle=NGRAM_JACCARD_ORACLE)
@@ -471,118 +358,112 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles are ~10^-7 — and a collision would have to land inside one
     doc pair's intersection to perturb a count)."""
     t = 0.6
-    memo = _ngram_memo_get(spark, sf_dir)
-    if memo is not None:
-        docs, cand = memo
-    else:
-        d = load(spark, sf_dir, "documents")
-        sh = _stage_barrier(
-            _shingles(d, 3).select("doc_id", F.xxhash64("shingle").alias("sh"))
-        )
-        dfreq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
-        # corpus-adaptive generalized-prefix order (r12; see
-        # _PREFIX_DENSITY_SWITCH): k=2 pair-key blocking on saturated
-        # shingle spaces, classic k=1 otherwise — both exact
-        k = _prefix_k(dfreq, spark, sf_dir)
+    d = load(spark, sf_dir, "documents")
+    sh = _stage_barrier(
+        _shingles(d, 3).select("doc_id", F.xxhash64("shingle").alias("sh"))
+    )
+    dfreq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
+    # corpus-adaptive generalized-prefix order (r12; see
+    # _PREFIX_DENSITY_SWITCH): k=2 pair-key blocking on saturated
+    # shingle spaces, classic k=1 otherwise — both exact
+    k = _prefix_k(dfreq)
 
-        # One per-doc aggregation produces BOTH the verification set and
-        # the prefix: collect (df, sh) structs, array_sort (rarest
-        # first), slice the first n − ⌈t·n⌉ + k as the prefix — all in
-        # codegen, no per-doc window pass over the shingle table.
-        docs = (
-            _stage_barrier(sh.join(dfreq, "sh"))
-            .groupBy("doc_id")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("df", "sh"))).alias(
-                    "ranked"
-                )
+    # One per-doc aggregation produces BOTH the verification set and
+    # the prefix: collect (df, sh) structs, array_sort (rarest
+    # first), slice the first n − ⌈t·n⌉ + k as the prefix — all in
+    # codegen, no per-doc window pass over the shingle table.
+    docs = (
+        _stage_barrier(sh.join(dfreq, "sh"))
+        .groupBy("doc_id")
+        .agg(
+            F.array_sort(F.collect_list(F.struct("df", "sh"))).alias(
+                "ranked"
             )
-            .select(
-                "doc_id",
-                F.transform("ranked", lambda s: s.sh).alias("shset"),
-                F.size("ranked").alias("n_sh"),
-            )
-            .withColumn(
-                "prefix",
-                F.slice(
-                    F.col("shset"),
-                    1,
-                    (F.col("n_sh") - F.ceil(t * F.col("n_sh")) + k).cast("int"),
+        )
+        .select(
+            "doc_id",
+            F.transform("ranked", lambda s: s.sh).alias("shset"),
+            F.size("ranked").alias("n_sh"),
+        )
+        .withColumn(
+            "prefix",
+            F.slice(
+                F.col("shset"),
+                1,
+                (F.col("n_sh") - F.ceil(t * F.col("n_sh")) + k).cast("int"),
+            ),
+        )
+        # the pin is load-bearing: without it the four consumers
+        # (pa/pb/av/bv) each re-run the collect_list + array_sort
+        # aggregation after the (reused) exchange — measured 2.8×
+        # slower at sf0.1. The blocks die with the returned DataFrame.
+        .transform(_pin)
+    )
+
+    if k == 1:
+        keys = F.col("prefix")
+    else:
+        # within-prefix ordered pairs (array_sort order IS the
+        # global rarity order, so both members of a qualifying
+        # pair derive the identical struct), plus degenerate
+        # (s, s) keys for docs whose overlap bound is < 2 — see
+        # _rarity_prefix's k=2 docstring for the soundness
+        # argument (within-doc shingles are distinct, so real
+        # pair keys never collide with degenerate ones)
+        pair_keys = F.flatten(
+            F.transform(
+                F.col("prefix"),
+                lambda x, i: F.transform(
+                    F.slice(
+                        F.col("prefix"), i + F.lit(2), F.size("prefix")
+                    ),
+                    lambda y: F.struct(
+                        x.alias("s1"), y.alias("s2")
+                    ),
                 ),
             )
-            # the cache is load-bearing: without it the four consumers
-            # (pa/pb/av/bv) each re-run the collect_list + array_sort
-            # aggregation after the (reused) exchange — measured 2.8×
-            # slower at sf0.1. Leak-bounded via _NGRAM_MEMO (one corpus
-            # index at a time), not a bare fire-and-forget .cache().
-            .transform(_pin)
         )
+        degen = F.transform(
+            F.col("prefix"),
+            lambda s: F.struct(s.alias("s1"), s.alias("s2")),
+        )
+        keys = F.when(
+            F.ceil(F.lit(t) * F.col("n_sh")) < 2,
+            F.concat(pair_keys, degen),
+        ).otherwise(pair_keys)
 
-        if k == 1:
-            keys = F.col("prefix")
-        else:
-            # within-prefix ordered pairs (array_sort order IS the
-            # global rarity order, so both members of a qualifying
-            # pair derive the identical struct), plus degenerate
-            # (s, s) keys for docs whose overlap bound is < 2 — see
-            # _rarity_prefix's k=2 docstring for the soundness
-            # argument (within-doc shingles are distinct, so real
-            # pair keys never collide with degenerate ones)
-            pair_keys = F.flatten(
-                F.transform(
-                    F.col("prefix"),
-                    lambda x, i: F.transform(
-                        F.slice(
-                            F.col("prefix"), i + F.lit(2), F.size("prefix")
-                        ),
-                        lambda y: F.struct(
-                            x.alias("s1"), y.alias("s2")
-                        ),
-                    ),
-                )
-            )
-            degen = F.transform(
-                F.col("prefix"),
-                lambda s: F.struct(s.alias("s1"), s.alias("s2")),
-            )
-            keys = F.when(
-                F.ceil(F.lit(t) * F.col("n_sh")) < 2,
-                F.concat(pair_keys, degen),
-            ).otherwise(pair_keys)
-
-        pa = docs.select(
-            F.col("doc_id").alias("doc_a"),
-            F.explode(keys).alias("bk"),
-            F.col("n_sh").alias("na"),
+    pa = docs.select(
+        F.col("doc_id").alias("doc_a"),
+        F.explode(keys).alias("bk"),
+        F.col("n_sh").alias("na"),
+    )
+    pb = docs.select(
+        F.col("doc_id").alias("doc_b"),
+        F.explode(keys).alias("bk"),
+        F.col("n_sh").alias("nb"),
+    )
+    # size-compatibility prune INSIDE the join: jaccard ≥ t implies
+    # |A| ≥ t·|B| and |B| ≥ t·|A|, so incompatible pairs are provably
+    # below threshold and never reach verification
+    cand = (
+        _stage_barrier(
+            pa.join(
+                pb,
+                (pa.bk == pb.bk)
+                & (F.col("doc_a") < F.col("doc_b"))
+                & (F.col("na") >= t * F.col("nb"))
+                & (F.col("nb") >= t * F.col("na")),
+            ).select("doc_a", "doc_b")
         )
-        pb = docs.select(
-            F.col("doc_id").alias("doc_b"),
-            F.explode(keys).alias("bk"),
-            F.col("n_sh").alias("nb"),
-        )
-        # size-compatibility prune INSIDE the join: jaccard ≥ t implies
-        # |A| ≥ t·|B| and |B| ≥ t·|A|, so incompatible pairs are provably
-        # below threshold and never reach verification
-        cand = (
-            _stage_barrier(
-                pa.join(
-                    pb,
-                    (pa.bk == pb.bk)
-                    & (F.col("doc_a") < F.col("doc_b"))
-                    & (F.col("na") >= t * F.col("nb"))
-                    & (F.col("nb") >= t * F.col("na")),
-                ).select("doc_a", "doc_b")
-            )
-            .distinct()
-            .transform(_pin)
-        )
-        _ngram_memo_put(spark, sf_dir, (docs, cand))
+        .distinct()
+        .transform(_pin)
+    )
 
     # exact verification: candidate pairs join back to the per-doc sets;
     # the intersection count runs as array_intersect in codegen, never
     # re-shuffling the shingle table. Capped broadcast: without any
     # broadcast the static planner builds on the ARRAY-carrying
-    # av/bv sides (their cached stats look small at test scale) and the
+    # av/bv sides (their pinned stats look small at test scale) and the
     # query measures 2.8× slower at sf0.1.
     vcand = _capped_broadcast(cand)
     av = docs.select(
@@ -642,32 +523,27 @@ def q_dedup_ngram_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load(spark, sf_dir, "documents")
     t = 0.6
-    sh = _shared_shingles(spark, sf_dir, d)
-    memo = _ngram_memo_get(spark, sf_dir, variant="prefix")
-    if memo is not None:
-        (cand,) = memo
-    else:
-        prefix = _rarity_prefix(sh, t, spark, sf_dir)
+    sh = _pin(_shingles(d, 3))
+    prefix = _rarity_prefix(sh, t)
 
-        pa = prefix.select(
-            F.col("doc_id").alias("doc_a"), "key", F.col("n_sh").alias("na")
+    pa = prefix.select(
+        F.col("doc_id").alias("doc_a"), "key", F.col("n_sh").alias("na")
+    )
+    pb = prefix.select(
+        F.col("doc_id").alias("doc_b"), "key", F.col("n_sh").alias("nb")
+    )
+    cand = (
+        pa.join(
+            pb,
+            (pa.key == pb.key)
+            & (F.col("doc_a") < F.col("doc_b"))
+            & (F.col("na") >= t * F.col("nb"))
+            & (F.col("nb") >= t * F.col("na")),
         )
-        pb = prefix.select(
-            F.col("doc_id").alias("doc_b"), "key", F.col("n_sh").alias("nb")
-        )
-        cand = (
-            pa.join(
-                pb,
-                (pa.key == pb.key)
-                & (F.col("doc_a") < F.col("doc_b"))
-                & (F.col("na") >= t * F.col("nb"))
-                & (F.col("nb") >= t * F.col("na")),
-            )
-            .select("doc_a", "doc_b", "na", "nb")
-            .distinct()
-            .transform(_pin)
-        )
-        _ngram_memo_put(spark, sf_dir, (cand,), variant="prefix")
+        .select("doc_a", "doc_b", "na", "nb")
+        .distinct()
+        .transform(_pin)
+    )
 
     # exact verification: full intersection count on candidates only
     a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
@@ -796,54 +672,49 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Deterministic, but recall < 1 ⇒ rows-only; the test suite asserts
     recall vs the exact-Jaccard pairs on the small SF."""
     d = load(spark, sf_dir, "documents")
-    sh = _shared_shingles(spark, sf_dir, d)
-    memo = _ngram_memo_get(spark, sf_dir, variant="minhash")
-    if memo is not None:
-        (cand,) = memo
-    else:
-        sig = minhash_signatures(sh)
+    sh = _pin(_shingles(d, 3))
+    sig = minhash_signatures(sh)
 
-        bands = sig.select(
-            "doc_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.xxhash64(
-                                *[F.col("sig")[b * ROWS_PER_BAND + r] for r in range(ROWS_PER_BAND)]
-                            ).alias("bucket"),
-                        )
-                        for b in range(N_BANDS)
-                    ]
-                )
-            ).alias("bb"),
-        ).select("doc_id", "bb.band", "bb.bucket")
-
-        bands = _stage_barrier(bands)
-        cand = (
-            bands.alias("x")
-            .join(bands.alias("y"), ["band", "bucket"])
-            .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-            .select(
-                F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b")
+    bands = sig.select(
+        "doc_id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        F.xxhash64(
+                            *[F.col("sig")[b * ROWS_PER_BAND + r] for r in range(ROWS_PER_BAND)]
+                        ).alias("bucket"),
+                    )
+                    for b in range(N_BANDS)
+                ]
             )
-            .distinct()
-            .transform(_pin)
+        ).alias("bb"),
+    ).select("doc_id", "bb.band", "bb.bucket")
+
+    bands = _stage_barrier(bands)
+    cand = (
+        bands.alias("x")
+        .join(bands.alias("y"), ["band", "bucket"])
+        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
+        .select(
+            F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b")
         )
-        _ngram_memo_put(spark, sf_dir, (cand,), variant="minhash")
+        .distinct()
+        .transform(_pin)
+    )
 
     # exact verification of candidates only (r13 optimization round):
     # two broadcast-cand joins against the pinned per-doc hash-array
     # table + one array_intersect per pair — work ∝ candidate pairs.
-    # The former shape aggregated per-doc sizes over the WHOLE cached
+    # The former shape aggregated per-doc sizes over the WHOLE pinned
     # shingle table and shuffled the full table by (doc_id, shingle)
     # into the candidate fan-out every run (measured 1.54 s → 0.66 s
     # warm at sf0.1). The candidate set is orders of magnitude smaller
     # than the shingle table — broadcast it under the measured cap;
     # past the cap AQE decides (VERDICT r4 #4: no unconditional
     # broadcast of data-dependent tables).
-    arr = _shared_doc_arrays(spark, sf_dir, sh)
+    arr = _doc_arrays(sh)
     va = arr.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("ha"))
     vb = arr.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("hb"))
     common = (
@@ -1493,40 +1364,35 @@ def q_dedup_incremental_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hash-safe class)."""
     d = load(spark, sf_dir, "documents")
     t = 0.6
-    sh = _shared_shingles(spark, sf_dir, d)
-    memo = _ngram_memo_get(spark, sf_dir, variant="incr_fuzzy")
-    if memo is not None:
-        (cand,) = memo
-    else:
-        prefix = _rarity_prefix(sh, t, spark, sf_dir)
-        is_batch = F.col("doc_id") % 10 == 0
-        pb = prefix.filter(is_batch).select(
-            F.col("doc_id").alias("new_id"), "key", F.col("n_sh").alias("nb")
+    sh = _pin(_shingles(d, 3))
+    prefix = _rarity_prefix(sh, t)
+    is_batch = F.col("doc_id") % 10 == 0
+    pb = prefix.filter(is_batch).select(
+        F.col("doc_id").alias("new_id"), "key", F.col("n_sh").alias("nb")
+    )
+    ph = prefix.filter(~is_batch).select(
+        F.col("doc_id").alias("dup_of"), "key", F.col("n_sh").alias("nh")
+    )
+    cand = (
+        _stage_barrier(
+            pb.join(
+                ph,
+                (pb.key == ph.key)
+                & (F.col("nb") >= t * F.col("nh"))
+                & (F.col("nh") >= t * F.col("nb")),
+            ).select("new_id", "dup_of", "nb", "nh")
         )
-        ph = prefix.filter(~is_batch).select(
-            F.col("doc_id").alias("dup_of"), "key", F.col("n_sh").alias("nh")
-        )
-        cand = (
-            _stage_barrier(
-                pb.join(
-                    ph,
-                    (pb.key == ph.key)
-                    & (F.col("nb") >= t * F.col("nh"))
-                    & (F.col("nh") >= t * F.col("nb")),
-                ).select("new_id", "dup_of", "nb", "nh")
-            )
-            .distinct()
-            .transform(_pin)
-        )
-        _ngram_memo_put(spark, sf_dir, (cand,), variant="incr_fuzzy")
+        .distinct()
+        .transform(_pin)
+    )
     # (r13 optimization round) verification via the pinned per-doc
     # hash-array table: two broadcast-cand joins + one array_intersect
-    # per candidate — the former shape shuffled the WHOLE cached
+    # per candidate — the former shape shuffled the WHOLE pinned
     # shingle table by (dup_of, shingle) into the candidate fan-out and
     # re-aggregated it every run (same rework as q_dedup_minhash's
     # verification; nb/nh already ride on cand, so no first() pulls and
     # no aggregation at all).
-    arr = _shared_doc_arrays(spark, sf_dir, sh)
+    arr = _doc_arrays(sh)
     va = arr.select(F.col("doc_id").alias("new_id"), F.col("hs").alias("ha"))
     vb = arr.select(F.col("doc_id").alias("dup_of"), F.col("hs").alias("hb"))
     common = (
@@ -1808,27 +1674,23 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     test scales the capped plan is bit-identical to the uncapped
     oracle — asserted by test_containment_df_cap_exceeds_fixture_df."""
     d = load(spark, sf_dir, "documents")
-    # Derive the hashed shingle stream from the ONE shared cached
-    # 3-word shingle table (same k as the jaccard family) instead of
-    # re-running the split/explode/distinct pipeline privately: the
-    # r12 rework added a corpus-density probe (_prefix_k below) whose
-    # driver-side collect is a SECOND full execution of this
-    # pipeline when the stream is uncached — measured +2.5x on this
-    # query at sf0.1 (bench r13: anchor 2.06 s -> 5.07 s, persisting
-    # through retry). Off the shared cache the density job
-    # materializes the slot once (warm already whenever any
-    # prefix/minhash/incr_fuzzy key ran first) and the main job
-    # rereads it, restoring the pre-rework cost with no second scan.
+    # Derive the hashed shingle stream from a PINNED 3-word shingle
+    # table (same k as the jaccard family): the corpus-density probe
+    # (_prefix_k below) is a driver-side collect, and over an unpinned
+    # stream it is a SECOND full execution of the split/explode/distinct
+    # pipeline — measured +2.5x on this query at sf0.1 (bench r13:
+    # anchor 2.06 s -> 5.07 s). Pinned, the density job and the main
+    # job both read the materialised table.
     # the ADVICE-r7 single-constant guard: sizes below derive |S_B|
-    # from CONTAINMENT_SHINGLE_K, so the shared slot (fixed k=3) is
+    # from CONTAINMENT_SHINGLE_K, so the 3-shingle table is
     # only a legal source for the numerator stream while the constant
     # stays 3 — desynchronizing them would silently mis-scale
     # containment, hence the hard check rather than a comment
     assert CONTAINMENT_SHINGLE_K == 3, (
-        "containment must shingle at the shared slot's k"
+        "containment must shingle at the jaccard family's k"
     )
     sh = _stage_barrier(
-        _shared_shingles(spark, sf_dir, d).select(
+        _pin(_shingles(d, 3)).select(
             "doc_id", F.xxhash64("shingle").alias("h")
         )
     )
@@ -1852,7 +1714,6 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     dfreq = sh.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
     df_ok = dfreq.filter(F.col("df") <= CONTAINMENT_DF_CAP)
     indexed = _stage_barrier(sh.join(df_ok, "h"))
-    memo = _ngram_memo_get(spark, sf_dir, variant="containment")
     # Corpus-adaptive candidate scheme (r12, same switch as the
     # jaccard family): below the density switch the classic full
     # inverted-index self-join counts common shingles directly; on a
@@ -1871,27 +1732,17 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Degenerate (s,s) keys cover contained docs whose bound is < 2,
     # matched by container-side singles. Both schemes are exact and
     # produce the same (doc_a < doc_b, n_common-over-capped-sets)
-    # relation the directed emission below consumes. The k=2 branch's
-    # pinned index/candidates are leak-bounded via the one-slot
-    # "containment" memo variant, like every other dedup cache.
-    if memo is not None:
-        common = memo[-1]
-    elif _prefix_k(dfreq, spark, sf_dir) == 1:
+    # relation the directed emission below consumes.
+    if _prefix_k(dfreq) == 1:
         a = indexed.select(F.col("doc_id").alias("doc_a"), "h")
         b = indexed.select(F.col("doc_id").alias("doc_b"), "h")
-        common = _pin(
+        common = (
             _stage_barrier(
                 a.join(b, "h").filter(F.col("doc_a") < F.col("doc_b"))
             )
             .groupBy("doc_a", "doc_b")
             .agg(F.count(F.lit(1)).alias("n_common"))
         )
-        # same one-slot memo discipline as the k=2 branch (r13): the
-        # common-count table is the whole cost of this query; without
-        # the slot every re-execution in a session re-ran the
-        # self-join (the jaccard family already memoizes its
-        # candidates — this branch was the one dedup path that didn't)
-        _ngram_memo_put(spark, sf_dir, (common,), variant="containment")
     else:
         arr = (
             _stage_barrier(indexed)
@@ -1976,9 +1827,6 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("n_common"),
             )
             .filter(F.col("n_common") > 0)
-        )
-        _ngram_memo_put(
-            spark, sf_dir, (arr, cand, common), variant="containment"
         )
     sz_a = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
     sz_b = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
@@ -2071,33 +1919,28 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(pfx < "cc", "train").when(pfx < "e6", "val").otherwise("test")
     )
     sp = d.select("doc_id", split.alias("split"))
-    sh = _shared_shingles(spark, sf_dir, d)
-    memo = _ngram_memo_get(spark, sf_dir, variant="leakage")
-    if memo is not None:
-        (cand,) = memo
-    else:
-        prefix = _rarity_prefix(sh, t, spark, sf_dir).join(sp, "doc_id")
-        pe = prefix.filter(F.col("split") != "train").select(
-            F.col("doc_id").alias("ev_id"),
-            "key",
-            F.col("n_sh").alias("ne"),
-            "split",
+    sh = _pin(_shingles(d, 3))
+    prefix = _rarity_prefix(sh, t).join(sp, "doc_id")
+    pe = prefix.filter(F.col("split") != "train").select(
+        F.col("doc_id").alias("ev_id"),
+        "key",
+        F.col("n_sh").alias("ne"),
+        "split",
+    )
+    pt = prefix.filter(F.col("split") == "train").select(
+        F.col("doc_id").alias("tr_id"), "key", F.col("n_sh").alias("nt")
+    )
+    cand = (
+        pe.join(
+            pt,
+            (pe.key == pt.key)
+            & (F.col("ne") >= t * F.col("nt"))
+            & (F.col("nt") >= t * F.col("ne")),
         )
-        pt = prefix.filter(F.col("split") == "train").select(
-            F.col("doc_id").alias("tr_id"), "key", F.col("n_sh").alias("nt")
-        )
-        cand = (
-            pe.join(
-                pt,
-                (pe.key == pt.key)
-                & (F.col("ne") >= t * F.col("nt"))
-                & (F.col("nt") >= t * F.col("ne")),
-            )
-            .select("ev_id", "tr_id", "ne", "nt", "split")
-            .distinct()
-            .transform(_pin)
-        )
-        _ngram_memo_put(spark, sf_dir, (cand,), variant="leakage")
+        .select("ev_id", "tr_id", "ne", "nt", "split")
+        .distinct()
+        .transform(_pin)
+    )
     a = sh.select(F.col("doc_id").alias("ev_id"), "shingle")
     b = sh.select(F.col("doc_id").alias("tr_id"), "shingle")
     # (r13 optimization round) ne/nt/split are constant per candidate

@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..registry import register
-from .ivf import TRAIN_CAP, quant_key, quant_memo
+from .ivf import TRAIN_CAP
 from .similarity import (
     MAX_PROBES,
     _KNN_ORACLE,
@@ -153,13 +153,7 @@ def q_sim_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     dim = 64
-    books = quant_memo(
-        quant_key(
-            spark, sf_dir, "pq",
-            m=M_SUB, k=K_CODES, iters=PQ_ITERS, cap=TRAIN_CAP,
-        ),
-        lambda: train_codebooks(emb, dim),
-    )
+    books = train_codebooks(emb, dim)
     CB = np.asarray(books, dtype=np.float64)  # M × K × d_sub
     d_sub = dim // M_SUB
 

@@ -31,8 +31,7 @@ MAX_PROBES = 100_000
 #: (cos ≥ 0.9) it approaches 1.
 N_PLANES = 4
 
-#: driver-side power-iteration steps for q_vec_pca (also part of its
-#: quantizer-memo key — see ivf.quant_key)
+#: driver-side power-iteration steps for q_vec_pca
 _PCA_ITERS = 500
 _RNG_SEED = 42
 _DIM = 64
@@ -164,9 +163,6 @@ def q_sim_knn_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    # feed the matmul: small local partitions otherwise arrive as
-    # sub-1k Arrow batches that leave BLAS underfed
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
     q_pdf = (
         emb.filter(F.col("vec_id") % 100 == 0).limit(MAX_PROBES + 1).toPandas()
     )
@@ -267,7 +263,6 @@ def q_sim_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
     q_pdf = (
         emb.filter(F.col("vec_id") % 100 == 0).limit(MAX_PROBES + 1).toPandas()
     )
@@ -606,8 +601,6 @@ def q_vec_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     10% of ‖Av‖ (500 driver-side steps against the fixture's 0.98
     eigengap ratio → ≈10⁻⁴). A broken product, accumulation, or
     normalization flips a boolean and hash-fails the query."""
-    from .ivf import quant_key, quant_memo
-
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.transform(
@@ -615,10 +608,7 @@ def q_vec_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda e: F.round(e * 1000000.0, 0).cast("long"),
         ).alias("xv"),
     )
-    row = quant_memo(
-        quant_key(spark, sf_dir, "pca", iters=_PCA_ITERS),
-        lambda: _pca_power_iteration(emb),
-    )
+    row = _pca_power_iteration(emb)
     return spark.createDataFrame(
         [row],
         "dim long, n_vecs long, unit_norm_ok boolean, "
@@ -627,8 +617,7 @@ def q_vec_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pca_power_iteration(emb):
-    """Gram-matrix formulation behind q_vec_pca, memoized per
-    (app, corpus) like the IVF/PQ quantizers: ONE corpus scan
+    """Gram-matrix formulation behind q_vec_pca: ONE corpus scan
     accumulates the exact upper-triangle Gram matrix G = Σ x xᵀ as
     dim·(dim+1)/2 DECIMAL(38,0) sums of integer products (map-side
     combinable, partition-order-free by construction), and the power

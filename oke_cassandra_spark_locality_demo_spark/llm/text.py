@@ -1237,8 +1237,8 @@ def q_text_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     training. Complements `q_text_repetition` (INTRA-doc duplication)
     with the CROSS-doc axis, without materializing any pair.
 
-    Scale shape: reuses the cached corpus shingle table
-    (`dedup._shared_shingles`), collapses shingles to 64-bit xxhash64
+    Scale shape: pins the corpus 3-shingle table (`dedup._shingles`,
+    read by both aggregations below), collapses shingles to 64-bit xxhash64
     keys before the two shuffles (df-count groupBy and the join back),
     so all wide stages move 8-byte longs — the same trick as the
     production jaccard op; the collision argument is documented there
@@ -1246,10 +1246,11 @@ def q_text_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-sized; per-doc aggregation is a plain map-side-combinable
     count. All-integer emissions (ppm is a scale-0 ROUND of an
     int-ratio double)."""
-    from .dedup import _shared_shingles
+    from ..memharden import pin
+    from .dedup import _shingles
 
     d = load(spark, sf_dir, "documents")
-    sh = _shared_shingles(spark, sf_dir, d).select(
+    sh = pin(_shingles(d, 3)).select(
         "doc_id", F.xxhash64("shingle").alias("k")
     )
     # (r13 optimization round) a df=1 shingle has exactly ONE owner —

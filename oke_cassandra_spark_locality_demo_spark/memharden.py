@@ -27,10 +27,11 @@ they trade pipelining for guaranteed progress:
   cannot starve. Results are bit-identical — same rows, lineage cut
   only. NOTE: not applicable upstream of ``input_file_name()``
   consumers (checkpointed blocks have no file).
-- ``pin(df)``: the persist analog — ``cache()`` (MEMORY_AND_DISK)
-  normally; DISK_ONLY at 2 partitions under starvation so cached
-  blocks stop squatting the protected storage region that execution
-  cannot evict.
+- ``pin(df)``: materialise an intermediate its caller reads more than
+  once — an eager ``localCheckpoint`` normally, ``stage_barrier``'s
+  DISK_ONLY checkpoint under starvation (so pinned blocks stop
+  squatting the protected storage region that execution cannot
+  evict).
 - ``starved_parts(spark)``: the partition count (2) for call sites
   that must keep their own operators (e.g. dynamic-partition writes
   whose sorters starve at 16-wide) but can run them narrow; None at
@@ -119,12 +120,12 @@ def stage_barrier(df: DataFrame) -> DataFrame:
 
 
 def pin(df: DataFrame) -> DataFrame:
-    """``cache()`` at normal memory; DISK_ONLY persist at STARVED_PARTS
-    partitions under starvation (keeps reuse semantics with zero
-    storage-memory footprint; ``unpersist()`` works identically)."""
-    if not exec_memory_starved(df.sparkSession):
-        return df.cache()
-    from pyspark.storagelevel import StorageLevel
-
-    _ensure_starved_session_tuning(df.sparkSession)
-    return df.repartition(STARVED_PARTS).persist(StorageLevel.DISK_ONLY)
+    """Materialise ``df`` for a caller that reads it more than once: an
+    eager ``localCheckpoint`` at normal memory, ``stage_barrier`` under
+    starvation. The blocks belong to the returned DataFrame alone — no
+    CacheManager entry, so no later query with an identical plan reuses
+    them — and the ContextCleaner reclaims them once that handle is
+    dropped (the contract ``ckpt.py`` documents)."""
+    if exec_memory_starved(df.sparkSession):
+        return stage_barrier(df)
+    return df.localCheckpoint()

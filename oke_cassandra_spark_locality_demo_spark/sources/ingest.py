@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import load, register_views
-from ..memharden import starved_parts
+from ..memharden import pin, starved_parts
 from ..registry import EVENTS_US, register
 from ..workdir import scratch_root
 
@@ -444,10 +444,9 @@ def q_source_json_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .json(path)
     )
-    # cache before splitting on _corrupt_record: Spark requires referencing
+    # pin before splitting on _corrupt_record: Spark requires referencing
     # the corrupt column only on a materialized frame (SPARK-21610)
-    raw = raw.cache()
-    raw.count()
+    raw = pin(raw)
     bad = F.col("_corrupt_record").isNotNull()
     return raw.agg(
         F.count_if(~bad).alias("n_good"),

@@ -363,33 +363,39 @@ def test_knn_blas_probe_cap_raises(spark, sf_dir, monkeypatch):
         get("q_sim_knn_blas").fn(spark, sf_dir)
 
 
-def test_ngram_memo_bounded_and_reused(spark, sf_dir):
-    """The dedup index memo is one slot PER VARIANT: repeat invocations
-    on the same (session, corpus) reuse the SAME cached DataFrames, and
-    no variant ever holds more than one corpus index (ADVICE r3: the
-    former bare .cache() leaked per call; r5 extended the memo from the
-    jaccard variant to prefix/minhash)."""
-    from oke_cassandra_spark_locality_demo_spark.llm import dedup
-
-    def jaccard_slots():
-        return {
-            k: v for k, v in dedup._NGRAM_MEMO.items() if k[-1] == "jaccard"
-        }
-
-    get("q_dedup_ngram_jaccard").fn(spark, sf_dir)
-    assert len(jaccard_slots()) == 1
-    (docs1, cand1) = next(iter(jaccard_slots().values()))
-    get("q_dedup_ngram_jaccard").fn(spark, sf_dir)
-    assert len(jaccard_slots()) == 1
-    (docs2, cand2) = next(iter(jaccard_slots().values()))
-    assert docs1 is docs2 and cand1 is cand2, "memo was not reused"
-    # cross-variant isolation: other variants keep at most one slot too
-    get("q_dedup_ngram_prefix").fn(spark, sf_dir)
-    get("q_dedup_ngram_prefix").fn(spark, sf_dir)
-    per_variant: dict = {}
-    for k in dedup._NGRAM_MEMO:
-        per_variant[k[-1]] = per_variant.get(k[-1], 0) + 1
-    assert all(v == 1 for v in per_variant.values()), per_variant
+def test_repeat_builds_recompute_and_cache_nothing(spark, sf_dir):
+    """No key carries state from one call to the next. Each key is built
+    twice in one session, the second time under another shuffle width:
+    the second build must run Spark jobs of its own, both builds must
+    return equal rows, and Spark's CacheManager must stay empty — pinned
+    intermediates are local checkpoints owned by the returned DataFrame,
+    never cache entries a later identical plan would silently reuse."""
+    sc = spark.sparkContext
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    keys = (
+        "q_dedup_ngram_jaccard", "q_dedup_containment", "q_sim_ivf",
+        "q_source_json_corrupt",
+    )
+    try:
+        for name in keys:
+            rows, jobs = [], []
+            for i, n_part in enumerate((prev, "5")):
+                spark.conf.set("spark.sql.shuffle.partitions", n_part)
+                group = f"rebuild:{name}:{i}"
+                sc.setJobGroup(group, group)
+                df = get(name).fn(spark, sf_dir)
+                sc._jsc.clearJobGroup()
+                jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+                rows.append(sorted((tuple(r) for r in df.collect()), key=repr))
+            assert jobs[1] > 0, f"{name}: second build ran no jobs {jobs}"
+            assert rows[0] == rows[1], f"{name}: rebuild changed the rows"
+            assert rows[0], f"{name}: returned no rows"
+            assert cache.isEmpty(), f"{name} left a CacheManager entry"
+    finally:
+        sc._jsc.clearJobGroup()
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def test_ivf_training_sample_guards(spark, sf_dir):
@@ -470,33 +476,9 @@ def test_multimodal_resize_binary_plumbing(spark, sf_dir):
         assert r["resized"][-1] == r["last_byte"]
 
 
-def test_quant_memo_bounded_and_reused(spark, sf_dir):
-    """Trained-quantizer memo: a second q_sim_ivf invocation must reuse
-    the trained centroids (identical object), and the FIFO bound must
-    hold as distinct keys churn."""
-    from oke_cassandra_spark_locality_demo_spark.llm import ivf
-
-    ivf._QUANT_MEMO.clear()
-    get("q_sim_ivf").fn(spark, sf_dir).count()
-    # r5: the key carries hyperparameters + a corpus fingerprint
-    # (ADVICE r4 — a retuned caller or regenerated fixture must miss)
-    key = ivf.quant_key(
-        spark, sf_dir, "ivf",
-        k=ivf.K_CELLS, iters=ivf.N_ITERS, cap=ivf.TRAIN_CAP,
-    )
-    assert key in ivf._QUANT_MEMO
-    first = ivf._QUANT_MEMO[key]
-    get("q_sim_ivf").fn(spark, sf_dir).count()
-    assert ivf._QUANT_MEMO[key] is first  # reused, not retrained
-    for i in range(ivf._QUANT_MEMO_SLOTS + 2):
-        ivf.quant_memo(("app", f"dir{i}", "x"), lambda: [i])
-    assert len(ivf._QUANT_MEMO) <= ivf._QUANT_MEMO_SLOTS
-
-
 def test_quantizer_training_partition_invariant(spark, sf_dir):
-    """The r4 decimal-sum conversion's point, tested directly: with the
-    memo CLEARED between runs (the memo otherwise hides exactly this),
-    k-means training under 5 vs 32 shuffle partitions must produce
+    """The r4 decimal-sum conversion's point, tested directly: k-means
+    training under 5 vs 32 shuffle partitions must produce
     bit-identical centroids — a plain double F.sum here drifts with the
     partial-aggregation order (the r1-r3 driver-fail mechanism)."""
     from pyspark.sql import functions as F
@@ -1101,17 +1083,15 @@ class TestStarvationHardening:
         out = dedup._stage_barrier(df)
         assert out is df, "normal-memory plans must be untouched"
 
-    def test_pin_caches_at_normal_memory(self, spark, sf_dir):
-        from pyspark import StorageLevel
-
+    def test_pin_materialises_at_normal_memory(self, spark, sf_dir):
         from oke_cassandra_spark_locality_demo_spark.llm import dedup
 
         df = dedup.load(spark, sf_dir, "documents").select("doc_id")
+        assert "FileScan" in df._jdf.queryExecution().executedPlan().toString()
         pinned = dedup._pin(df)
-        try:
-            assert pinned.storageLevel.useMemory
-        finally:
-            pinned.unpersist(blocking=True)
+        plan = pinned._jdf.queryExecution().executedPlan().toString()
+        assert "FileScan" not in plan and "ExistingRDD" in plan, plan
+        assert pinned.count() == df.count()
 
     def test_starved_detection_reads_memory_fraction(self, spark):
         from oke_cassandra_spark_locality_demo_spark.llm import dedup

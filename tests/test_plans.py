@@ -210,16 +210,11 @@ def test_dedup_candidate_broadcast_is_capped(spark, sf_dir, monkeypatch):
     from oke_cassandra_spark_locality_demo_spark.llm import dedup
 
     real_cap = dedup._CAND_BROADCAST_CAP
-    # fresh build both times via the eviction helper (deleting memo
-    # entries directly would orphan the cached DataFrames in the shared
-    # session with nothing left to ever unpersist them)
-    dedup._ngram_memo_evict("prefix")
     monkeypatch.setattr(dedup, "_CAND_BROADCAST_CAP", 0)
     df = get("q_dedup_ngram_prefix").fn(spark, sf_dir)
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert "ResolvedHint" not in plan and "BROADCAST" not in plan, plan
     # and with the real cap the fixture-scale candidate set broadcasts
-    dedup._ngram_memo_evict("prefix")
     monkeypatch.setattr(dedup, "_CAND_BROADCAST_CAP", real_cap)
     df2 = get("q_dedup_ngram_prefix").fn(spark, sf_dir)
     assert has_broadcast_join(df2)

@@ -175,12 +175,11 @@ def test_results_invariant_under_partitioning(spark, sf_dir):
         # verdict booleans are partitioning-free by construction
         "q_sessionize",
         "q_agg_sketch_cms",
-        # fifth-block additions: decimal power sums (moments) and the
-        # signed-delta IVM merge are exact by construction — hold them
-        # to it (q_vec_pca is deliberately absent: quant_memo returns
-        # the same trained state across configs, which would make the
-        # check vacuous — its exact-integer iteration is the guarantee)
+        # fifth-block additions: decimal power sums (moments), the
+        # signed-delta IVM merge and PCA's exact-integer Gram matrix
+        # are exact by construction — hold them to it
         "q_agg_sketch_moments",
+        "q_vec_pca",
         "q_mv_incremental",
         "q_merge_multi_action",
         # block-7 additions flagged by the second review: the
@@ -616,11 +615,14 @@ def test_arrow_batch_size_invariance(spark, sf_dir):
                 "spark.sql.execution.arrow.maxRecordsPerBatch", batch
             )
             for name in _ARROW_BATCHED_KEYS:
+                df = registry.get(name).fn(spark, sf_dir)
+                # a build that resets the conf would run every later
+                # key of this pass at its own batch size
+                assert spark.conf.get(
+                    "spark.sql.execution.arrow.maxRecordsPerBatch"
+                ) == batch, f"{name}'s build changed maxRecordsPerBatch"
                 rows = sorted(
-                    (
-                        tuple(_canon(v) for v in r)
-                        for r in registry.get(name).fn(spark, sf_dir).collect()
-                    ),
+                    (tuple(_canon(v) for v in r) for r in df.collect()),
                     key=_row_key,
                 )
                 results.setdefault(name, []).append(rows)

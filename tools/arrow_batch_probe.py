@@ -18,7 +18,10 @@ in tests/test_properties.py.
 
 tests/test_properties.py pins this probe's output (the detected key
 list and the per-module Arrow call-site counts); re-run this tool and
-update the pins whenever a new Arrow-batched operator lands.
+update the pins whenever a new Arrow-batched operator lands. A key
+whose build sets maxRecordsPerBatch itself would run every later key
+of the 7-row pass at its own batch size, so the sweep reports such a
+build as an error.
 
 Usage:
     python tools/arrow_batch_probe.py            # detect + sweep
@@ -106,9 +109,14 @@ def main() -> None:
                 "spark.sql.execution.arrow.maxRecordsPerBatch", batch
             )
             try:
+                df = fn(spark, SF_DIR)
+                conf = spark.conf.get(
+                    "spark.sql.execution.arrow.maxRecordsPerBatch"
+                )
+                if conf != batch:
+                    raise RuntimeError(f"build set maxRecordsPerBatch={conf}")
                 rows = sorted(
-                    (tuple(_canon(v) for v in r)
-                     for r in fn(spark, SF_DIR).collect()),
+                    (tuple(_canon(v) for v in r) for r in df.collect()),
                     key=_row_key,
                 )
             except Exception as e:  # noqa: BLE001

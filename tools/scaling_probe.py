@@ -84,8 +84,8 @@ def main() -> None:
     rows, flagged = [], []
     for name in names:
         fn = qs[name]
-        # warm both paths once so codegen/IO caches and any trained-state
-        # memos (BPE/IVF) are charged to neither measurement
+        # warm both paths once so JIT/codegen and file-open costs are
+        # charged to neither measurement
         fn(spark, SF_SMALL).count()
         fn(spark, SF_BIG).count()
         t_small = time_query(fn, spark, SF_SMALL, repeats=args.repeats)
